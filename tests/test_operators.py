@@ -337,6 +337,29 @@ def test_mixed_length_series_batching(spark):
         assert rs[0]["offset"] == pytest.approx(3.0)
         assert rs[0]["delta"] == pytest.approx(0.5)
 
+    # a per-length kernel whose bigint output width varies with n: the
+    # fused istft keeps the positions its windows cover
+    fl, hop = 4, 2
+    spec = xss.stft(df, by=["key"], dim="t", frame_len=fl, hop=hop)
+    rec = xss.istft(spec, by=["key"], frame_len=fl, hop=hop, reconstruct="fused")
+    assert dict(rec.dtypes)["t"] == "bigint"
+    got = {}
+    for r in rec.orderBy("key", "t").collect():
+        got.setdefault(r["key"], []).append(r)
+    assert set(got) == set(lengths)
+    taps = 0.5 - 0.5 * np.cos(2 * np.pi * np.arange(fl) / fl)
+    for key, rs in got.items():
+        n_frames = (lengths[key] - fl) // hop + 1
+        den = np.zeros((n_frames - 1) * hop + fl)
+        for f in range(n_frames):
+            den[f * hop : f * hop + fl] += taps**2
+        kept = np.flatnonzero(den > 1e-12)
+        assert all(type(r["t"]) is int for r in rs)
+        assert [r["t"] for r in rs] == kept.tolist()
+        np.testing.assert_allclose(
+            [r["value"] for r in rs], series[key][kept], atol=1e-9
+        )
+
 
 def test_keep_attrs_fft_ifft_chain(spark, sine_pdf):
     # reference `_keep_attrs` (signal.py:10-13): attrs must survive an
@@ -747,6 +770,24 @@ def test_csd_and_coherence_match_numpy(spark, sine_df, sine_pdf):
     # a pure delay of a sine keeps full coherence at the tone bin
     tone_bin = int(round(F0 / (FS / fl)))
     assert crows[tone_bin]["coherence"] > 0.99
+
+
+@pytest.mark.parametrize("hop,frame_len", [(0, 8), (-1, 8), (2, 0)])
+@pytest.mark.parametrize("op", ["welch", "istft", "csd", "coherence"])
+def test_framed_ops_reject_bad_hop_at_call_time(spark, op, hop, frame_len):
+    # hop=-1 would silently frame in reverse; hop=0 would fail inside
+    # the Python workers
+    df = spark.createDataFrame(
+        pd.DataFrame({"ch": 0, "t": np.arange(16.0), "value": np.ones(16)})
+    )
+    kw = dict(by=["ch"], frame_len=frame_len, hop=hop)
+    with pytest.raises(ValueError, match="frame_len and hop must be >= 1"):
+        if op == "welch":
+            xss.welch(df, dim="t", **kw)
+        elif op == "istft":
+            xss.istft(df, **kw)
+        else:
+            getattr(xss, op)(df, df, dim="t", **kw)
 
 
 # ---------------- istft ----------------

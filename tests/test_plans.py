@@ -304,7 +304,11 @@ def test_kernel_exchange_keeps_full_width(spark):
     exactly the bucket count, not a coalesced handful of partitions."""
     from pyspark.sql import functions as F
 
-    from xarray_scipy_spark.core import _default_buckets, apply_series_kernel
+    from xarray_scipy_spark.core import (
+        _default_buckets,
+        apply_series_kernel,
+        per_length,
+    )
 
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
         "user_id", "ts", "value"
@@ -314,7 +318,12 @@ def test_kernel_exchange_keeps_full_width(spark):
         return {"y": x}
 
     out = apply_series_kernel(
-        ev, ident, by=["user_id"], order="ts", values=["value"], out_fields="y double"
+        ev,
+        per_length(ident),
+        by=["user_id"],
+        order="ts",
+        values=["value"],
+        out_fields="y double",
     )
     out.collect()  # materialize so the AQE plan is final
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -336,16 +345,12 @@ def test_kernel_exchange_keeps_full_width(spark):
     assert n_parts == occupied, (n_parts, occupied)
 
 
-def test_kernel_exchange_width_scales_with_input(spark):
+def test_kernel_exchange_width_scales_with_input(spark, monkeypatch):
     """The kernel-exchange width heuristic: full task-wave width when
     the (pruned) input is large enough to amortize per-bucket Python
-    overhead, proportionally narrower when it is not, never below 1 —
-    and the conf knob overrides the target."""
-    from xarray_scipy_spark.core import (
-        _BUCKET_TARGET_CONF,
-        _default_buckets,
-        _plan_size_bytes,
-    )
+    overhead, proportionally narrower when it is not, never below 1."""
+    from xarray_scipy_spark import core
+    from xarray_scipy_spark.core import _default_buckets, _plan_size_bytes
 
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
         "user_id", "ts", "value"
@@ -357,19 +362,14 @@ def test_kernel_exchange_width_scales_with_input(spark):
 
     got = _default_buckets(ev)
     assert 1 <= got <= width
+    # consistency: the width is ceil(est / target), capped
+    assert got == min(width, max(1, -(-est // core._BUCKET_TARGET_BYTES)))
     # tiny target -> the cap binds (full width, the 100 TB regime)
-    spark.conf.set(_BUCKET_TARGET_CONF, "1")
-    try:
-        assert _default_buckets(ev) == width
-        # huge target -> single bucket (the floor)
-        spark.conf.set(_BUCKET_TARGET_CONF, str(1 << 40))
-        assert _default_buckets(ev) == 1
-    finally:
-        spark.conf.unset(_BUCKET_TARGET_CONF)
-    # consistency: the un-overridden width is ceil(est / default target)
-    from xarray_scipy_spark.core import _BUCKET_TARGET_DEFAULT
-
-    assert got == min(width, max(1, -(-est // _BUCKET_TARGET_DEFAULT)))
+    monkeypatch.setattr(core, "_BUCKET_TARGET_BYTES", 1)
+    assert _default_buckets(ev) == width
+    # huge target -> single bucket (the floor)
+    monkeypatch.setattr(core, "_BUCKET_TARGET_BYTES", 1 << 40)
+    assert _default_buckets(ev) == 1
 
 
 def test_pure_catalyst_smoothers_have_no_python_and_one_exchange(spark):

@@ -27,15 +27,19 @@ overhead once PER SERIES. With millions of short series that overhead
 dominates. Instead, the single-input primitive shuffles by
 ``hash(broadcast dims) % n_buckets``: one pandas group per BUCKET, each
 holding many complete series. Inside the UDF the bucket is sorted once,
-series boundaries are found vectorized, equal-length series are stacked
-into ``(n_series, n)`` blocks, and the kernel runs once per block —
-numpy-vectorized ACROSS series (this is what makes the sequential IIR
-recursion scale: the per-sample loop runs once per block, not once per
-series). Still exactly ONE shuffle; bucket count scales with the
-cluster (default: 2x shuffle partitions), and AQE coalesces or splits
-buckets as sizes demand. A single series never spans buckets, so the
-per-worker memory bound is unchanged from the reference's own
-``allow_rechunk`` concession (one series must fit one worker).
+series boundaries are found vectorized, every series is gathered into
+one right-zero-padded ``(n_series, n_max)`` block, and the kernel runs
+ONCE per bucket with the per-row true lengths — numpy-vectorized ACROSS
+series (this is what makes the sequential IIR recursion scale: the
+per-sample loop runs once per bucket, not once per series). That ragged
+call is the only kernel contract; a kernel written for equal-length
+blocks is adapted to it with :func:`per_length`. Still exactly ONE
+shuffle; bucket count scales with the cluster (default:
+``max(shuffle partitions, defaultParallelism)``, narrowed when the
+input is small), and one bucket maps to one partition. A single series
+never spans buckets, so the per-worker memory bound is unchanged from
+the reference's own ``allow_rechunk`` concession (one series must fit
+one worker); the padded block holds ``n_series × n_max`` values.
 """
 
 from __future__ import annotations
@@ -49,6 +53,7 @@ from pyspark.sql import DataFrame, functions as F
 __all__ = [
     "apply_series_kernel",
     "apply_cogrouped_kernel",
+    "per_length",
     "resolve_keep_attrs",
     "GROUP_ATTR_FIELDS",
 ]
@@ -143,11 +148,9 @@ def _series_bounds(pdf: pd.DataFrame, by: Sequence[str]) -> tuple[np.ndarray, np
 
 # Per-bucket input-volume target for the kernel exchange width
 # heuristic (Catalyst-estimated bytes of the PRUNED kernel input, not
-# raw file bytes). Tunable per session for unusual work-per-byte
-# kernels; the default was measured across the operator families at
-# sf0.1 and the 10x tier.
-_BUCKET_TARGET_CONF = "spark.xarray_scipy_spark.kernel.bucketTargetBytes"
-_BUCKET_TARGET_DEFAULT = 96 * 1024
+# raw file bytes), measured across the operator families at sf0.1 and
+# the 10x tier.
+_BUCKET_TARGET_BYTES = 96 * 1024
 # Catalyst reports Long.MaxValue-ish sizes for relations it cannot
 # estimate (e.g. RDD-backed local relations): treat those as unknown.
 _SIZE_UNKNOWN = 1 << 60
@@ -174,22 +177,69 @@ def _default_buckets(df: DataFrame) -> int:
     WIDTH is sized to the data: every bucket pays real per-task costs
     (python-worker attach, Arrow stream setup, scheduling — measured
     25-60 ms/task on contended hosts), so a bucket should carry at
-    least ``bucketTargetBytes`` of input before another one is worth
+    least ``_BUCKET_TARGET_BYTES`` of input before another one is worth
     opening. At real scale the estimate far exceeds
     ``width * target`` and the exchange is always full-width (capped at
-    shuffle partitions, which the user sizes so a partition fits an
-    executor); the reduction only engages on small inputs, exactly the
-    regime where per-bucket overhead dominates kernel work.
-    Pass ``buckets=`` explicitly to override per call.
+    ``max(shuffle partitions, defaultParallelism)``, which the user
+    sizes so a partition fits an executor); the reduction only engages
+    on small inputs, exactly the regime where per-bucket overhead
+    dominates kernel work.
     """
     sess = df.sparkSession
     parts = int(sess.conf.get("spark.sql.shuffle.partitions", "200"))
     width = max(parts, sess.sparkContext.defaultParallelism)
-    target = int(sess.conf.get(_BUCKET_TARGET_CONF, str(_BUCKET_TARGET_DEFAULT)))
     est = _plan_size_bytes(df)
-    if est is not None and target > 0:
-        width = min(width, max(1, -(-est // target)))
+    if est is not None:
+        width = min(width, max(1, -(-est // _BUCKET_TARGET_BYTES)))
     return width
+
+
+def _padded_blocks(
+    starts: np.ndarray, lengths: np.ndarray, vals: Sequence[np.ndarray]
+) -> list[np.ndarray]:
+    """Gather each series ``v[start:start+length]`` into row ``i`` of a
+    right-zero-padded ``(n_series, max(lengths))`` float64 block."""
+    jj = np.arange(int(lengths.max()))
+    gather = starts[:, None] + np.minimum(jj[None, :], lengths[:, None] - 1)
+    mask = jj[None, :] < lengths[:, None]
+    return [np.where(mask, v[gather], 0.0) for v in vals]
+
+
+def per_length(
+    kernel: Callable[..., dict[str, np.ndarray]],
+) -> Callable[..., dict[str, np.ndarray]]:
+    """Adapt an equal-length kernel to the ragged contract of
+    :func:`apply_series_kernel`.
+
+    ``kernel(*blocks) -> dict[name, (n_series, m)]`` sees one call per
+    distinct series length ``n`` with the unpadded ``block[rows, :n]``
+    — for transforms whose output depends on the whole series (FFTs,
+    frame grids), where zero padding would change the result. Each
+    call's output is scattered into a right-zero-padded
+    ``(n_series, m_max)`` array that keeps the kernel's dtype; ``m`` may
+    differ between lengths and becomes that row's ``__lengths__``.
+    """
+
+    def ragged(*blocks: np.ndarray, lengths: np.ndarray) -> dict[str, np.ndarray]:
+        pieces = []
+        for n in np.unique(lengths):
+            rows = np.flatnonzero(lengths == n)
+            out = kernel(*(b[rows, :n] for b in blocks))
+            pieces.append((rows, {k: np.atleast_2d(v) for k, v in out.items()}))
+        out_lens = np.zeros(len(lengths), dtype=np.int64)
+        for rows, out in pieces:
+            out_lens[rows] = next(iter(out.values())).shape[1]
+        m_max = int(out_lens.max())
+        res = {}
+        for name in pieces[0][1]:
+            dtype = np.result_type(*(out[name] for _, out in pieces))
+            res[name] = np.zeros((len(lengths), m_max), dtype=dtype)
+            for rows, out in pieces:
+                res[name][rows, : out[name].shape[1]] = out[name]
+        res["__lengths__"] = out_lens
+        return res
+
+    return ragged
 
 
 def apply_series_kernel(
@@ -202,28 +252,23 @@ def apply_series_kernel(
     out_fields: str,
     emit_idx: bool = True,
     keep: Sequence[str] = (),
-    buckets: int | None = None,
 ) -> DataFrame:
     """Apply a batched numpy kernel to every series group.
 
     Parameters
     ----------
     df : long-form DataFrame (one row per sample).
-    kernel : ``kernel(*blocks) -> dict[name, np.ndarray]`` where each
-        block is a ``(n_series, n)`` float64 matrix (one row per series,
-        equal length ``n`` within a call) and every returned array is
-        ``(n_series, m)`` — the kernel must be vectorized across rows
-        (numpy ops on the last axis are). A kernel with attribute
-        ``batch_ragged = True`` instead receives ONE call per bucket:
-        ``kernel(*blocks, lengths=...)`` with right-zero-padded
-        ``(n_series, n_max)`` blocks and the per-row true lengths, and
-        must return padded ``(n_series, m_max)`` arrays plus a
-        ``"__lengths__"`` entry of per-row output lengths (the tail
-        beyond each row's length is discarded). This is the mode for
-        recursion kernels (IIR filters), where a per-sample Python loop
-        per distinct length would dominate: causality makes the zero
-        padding exact, and the loop then runs once per bucket no matter
-        how many lengths the bucket mixes.
+    kernel : ``kernel(*blocks, lengths=...) -> dict[name, np.ndarray]``,
+        called ONCE per bucket. Each block is a right-zero-padded
+        ``(n_series, n_max)`` float64 matrix (one row per series) and
+        ``lengths`` holds each row's true sample count. The kernel
+        returns padded ``(n_series, m_max)`` arrays plus a
+        ``"__lengths__"`` entry of per-row output lengths; the tail
+        beyond each row's length is discarded. Causal recursions (IIR
+        filters) and FIR convolutions are exact on the padded block, so
+        their per-sample loop runs once per bucket no matter how many
+        lengths it mixes; a kernel that needs each series unpadded is
+        wrapped in :func:`per_length`.
     by : broadcast-dim columns (the series key — reference's loop dims).
     order : core-dim coordinate column (+ optional tie-break columns);
         the first entry supplies offset/delta (datetime ok — epoch-ns).
@@ -233,7 +278,6 @@ def apply_series_kernel(
     emit_idx : add ``idx bigint`` = 0..m-1 output position per series.
     keep : group-constant columns passed through unchanged (attrs
         sidecar, auxiliary metadata).
-    buckets : shuffle-key cardinality (default 2x shuffle partitions).
 
     Returns a long-form DataFrame with columns
     ``[*by, *keep, idx?, *out_fields, n_in, offset, delta]``.
@@ -252,7 +296,7 @@ def apply_series_kernel(
     by_ddl = (_ddl_of(df, by) + ", ") if by else ""
     schema = f"{by_ddl}{keep_ddl}{idx_field}{out_fields}, {GROUP_ATTR_FIELDS}"
     out_names = [f.strip().split()[0] for f in out_fields.split(",")]
-    n_buckets = buckets if buckets is not None else _default_buckets(df)
+    n_buckets = _default_buckets(df)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(by + order, kind="mergesort")
@@ -265,67 +309,23 @@ def apply_series_kernel(
             lengths > 1, np.abs(lasts - offsets) / np.maximum(lengths - 1, 1), 0.0
         )
         vals = [pdf[v].to_numpy(dtype=float) for v in values]
-
-        if getattr(kernel, "batch_ragged", False) and len(starts):
-            n_max = int(lengths.max())
-            jj = np.arange(n_max)
-            gather = np.minimum(starts[:, None] + jj[None, :], ends[:, None] - 1)
-            mask = jj[None, :] < lengths[:, None]
-            blocks = [np.where(mask, v[gather], 0.0) for v in vals]
-            out = kernel(*blocks, lengths=lengths)
-            out_lens = np.asarray(out.pop("__lengths__"), dtype=np.int64)
-            m_max = np.atleast_2d(next(iter(out.values()))).shape[1]
-            sel = np.arange(m_max)[None, :] < out_lens[:, None]
-            rep = np.repeat(starts, out_lens)
-            res = pd.DataFrame(index=np.arange(len(rep)))
-            for c in by + keep:
-                res[c] = pdf[c].to_numpy()[rep]
-            if emit_idx:
-                res["idx"] = np.broadcast_to(
-                    np.arange(m_max, dtype=np.int64), sel.shape
-                )[sel]
-            for name in out_names:
-                res[name] = np.atleast_2d(out[name])[sel]
-            res["n_in"] = np.repeat(lengths, out_lens)
-            res["offset"] = np.repeat(offsets, out_lens)
-            res["delta"] = np.repeat(deltas, out_lens)
-            return res
-
-        pieces: list[dict[str, np.ndarray]] = []
-        for n in np.unique(lengths):
-            sel = np.flatnonzero(lengths == n)
-            s = starts[sel]
-            row_idx = (s[:, None] + np.arange(n)).ravel()
-            blocks = [v[row_idx].reshape(len(s), n) for v in vals]
-            out = kernel(*blocks)
-            first = next(iter(out.values()))
-            m = np.atleast_2d(first).shape[1]
-            piece = {
-                "__rep__": np.repeat(s, m),  # row index of each series head
-                "n_in": np.full(len(s) * m, n, dtype=np.int64),
-                "offset": np.repeat(offsets[sel], m),
-                "delta": np.repeat(deltas[sel], m),
-            }
-            if emit_idx:
-                piece["idx"] = np.tile(np.arange(m, dtype=np.int64), len(s))
-            for name in out_names:
-                piece[name] = np.atleast_2d(out[name]).ravel()
-            pieces.append(piece)
-
-        cat = {
-            k: np.concatenate([p[k] for p in pieces])
-            for k in pieces[0]
-        } if pieces else {}
-        rep = cat.pop("__rep__", np.array([], dtype=np.int64))
+        out = kernel(*_padded_blocks(starts, lengths, vals), lengths=lengths)
+        out_lens = np.asarray(out.pop("__lengths__"), dtype=np.int64)
+        m_max = np.atleast_2d(next(iter(out.values()))).shape[1]
+        sel = np.arange(m_max)[None, :] < out_lens[:, None]
+        rep = np.repeat(starts, out_lens)
         res = pd.DataFrame(index=np.arange(len(rep)))
         for c in by + keep:
             res[c] = pdf[c].to_numpy()[rep]
         if emit_idx:
-            res["idx"] = cat["idx"] if pieces else np.array([], dtype=np.int64)
+            res["idx"] = np.broadcast_to(
+                np.arange(m_max, dtype=np.int64), sel.shape
+            )[sel]
         for name in out_names:
-            res[name] = cat[name] if pieces else np.array([], dtype=float)
-        for g in ("n_in", "offset", "delta"):
-            res[g] = cat[g] if pieces else np.array([], dtype=float)
+            res[name] = np.atleast_2d(out[name])[sel]
+        res["n_in"] = np.repeat(lengths, out_lens)
+        res["offset"] = np.repeat(offsets, out_lens)
+        res["delta"] = np.repeat(deltas, out_lens)
         return res
 
     # no broadcast dims (the reference's scalar / nchannels=None shape,
@@ -361,12 +361,11 @@ def apply_cogrouped_kernel(
     out_fields: str,
     emit_idx: bool = True,
     keep: Sequence[str] = (),
-    buckets: int | None = None,
 ) -> DataFrame:
     """Two-input variant (convolution's pair of signals, peak_widths'
     signal ⋈ peak-indices pairing, reference signal.py:84-105, 353-360).
 
-    Both inputs are shuffled ONCE on ``hash(by) % buckets`` and
+    Both inputs are shuffled ONCE on ``hash(by) % n_buckets`` and
     co-located (``cogroup().applyInPandas``) — one pandas invocation
     per BUCKET of many complete series pairs, not per pair, so
     Arrow/pandas overhead amortizes exactly like
@@ -397,7 +396,7 @@ def apply_cogrouped_kernel(
         by + keep + (["idx"] if emit_idx else []) + out_names
         + ["n_in", "offset", "delta"]
     )
-    n_buckets = buckets if buckets is not None else _default_buckets(df1)
+    n_buckets = _default_buckets(df1)
 
     def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({c: [] for c in all_names}).iloc[0:0]

@@ -366,8 +366,6 @@ def deconvolve(
             "__lengths__": lengths,
         }
 
-    kernel.batch_ragged = True
-
     res = apply_series_kernel(
         df,
         kernel,

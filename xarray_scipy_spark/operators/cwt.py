@@ -76,8 +76,6 @@ def cwt_ricker(
         out = np.stack(ys, axis=-1).reshape(k, n_max * nw)
         return {"value": out, "__lengths__": lengths * nw}
 
-    kernel.batch_ragged = True
-
     res = apply_series_kernel(
         df,
         kernel,

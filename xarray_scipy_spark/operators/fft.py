@@ -32,7 +32,7 @@ from collections.abc import Sequence
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..core import apply_series_kernel, resolve_keep_attrs
+from ..core import apply_series_kernel, per_length, resolve_keep_attrs
 from ..functions.coords import fft_coord, rfft_coord
 
 __all__ = ["fft", "ifft", "rfft", "irfft", "hfft", "ihfft", "fftshift", "ifftshift"]
@@ -79,7 +79,7 @@ def _make_fft(kind: str, inverse: bool, real: bool = False, hermitian: bool = Fa
         out_fields = "re double, im double" if complex_out else "value double"
         res = apply_series_kernel(
             df,
-            kernel,
+            per_length(kernel),
             by=by,
             order=order,
             values=values,

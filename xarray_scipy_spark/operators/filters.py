@@ -6,9 +6,9 @@ answer is ``allow_rechunk=True`` (signal.py:422, 452) — force the whole
 time axis into one block per series. Ours is the same concession made
 explicit — one shuffle co-locates each full series — but batched: many
 series share one bucket, the cascaded-biquad kernel runs once per
-equal-length block numpy-vectorized ACROSS series, so the per-sample
-recursion loop is paid once per block, not once per series
-(:func:`xarray_scipy_spark.core.apply_series_kernel`).
+bucket over a right-zero-padded block, numpy-vectorized ACROSS series,
+so the per-sample recursion loop is paid once per bucket, not once per
+series (:func:`xarray_scipy_spark.core.apply_series_kernel`).
 
 Scale path beyond reference parity (SURVEY.md §7 "hard parts"): for a
 single series longer than worker memory, overlap-and-discard chunked
@@ -39,8 +39,10 @@ from pyspark.sql import DataFrame
 
 from ..core import (
     _BUCKET,
+    _bucket_expr,
     _ddl_of,
     _default_buckets,
+    _padded_blocks,
     _series_bounds,
     apply_series_kernel,
     resolve_keep_attrs,
@@ -50,7 +52,6 @@ from ..kernels.dsp import (
     _validate_padtype,
     filtfilt_ragged,
     lfilter_ragged,
-    sosfilt_1d,
     sosfilt_ragged,
     sosfiltfilt_ragged,
 )
@@ -121,8 +122,6 @@ def sosfilt(
         y, _zf = sosfilt_ragged(sos, x, lengths, zi=zi)
         return {"value": y, "__lengths__": lengths}
 
-    kernel.batch_ragged = True
-
     res = apply_series_kernel(
         df,
         kernel,
@@ -166,8 +165,6 @@ def sosfiltfilt(
             "__lengths__": lengths,
         }
 
-    kernel.batch_ragged = True
-
     res = apply_series_kernel(
         df,
         kernel,
@@ -189,7 +186,6 @@ def sosfilt_chunked(
     dim: str,
     value: str = "value",
     chunk_rows: int = 4096,
-    buckets: int | None = None,
 ) -> DataFrame:
     """Causal SOS filter for series too long for one worker: sequential
     chunk passes with per-series ``zi`` handoff (the batch twin of
@@ -197,8 +193,8 @@ def sosfilt_chunked(
 
     The series splits into ``chunk_rows``-sample chunks; pass ``c``
     filters chunk ``c`` of EVERY series in parallel (bucket-batched,
-    vectorized across series), seeded with the section states the
-    previous pass left. The state — O(n_series × n_sections × 2)
+    one ragged recursion per bucket), seeded with the section states
+    the previous pass left. The state — O(n_series × n_sections × 2)
     doubles, independent of series length — hands off between passes
     as a cogrouped DataFrame on the SAME bucket keys (r7: it
     previously transited the driver via a per-pass ``collect()``,
@@ -241,13 +237,13 @@ def sosfilt_chunked(
         f"{by_ddl}{dim} {dict(df.dtypes)[dim]}, idx bigint, value double, "
         "zf array<double>"
     )
-    n_buckets = buckets if buckets is not None else _default_buckets(df)
-    bucket = F.pmod(F.xxhash64(*by), F.lit(n_buckets)) if by else F.lit(0)
+    n_buckets = _default_buckets(df)
+    bucket = _bucket_expr(df.sparkSession, by, n_buckets) if by else F.lit(0)
 
     # cogrouped signature: left = this pass's chunk rows, right = the
     # per-series section states the previous pass left (empty on pass
-    # 0). Both sides group on the same xxhash64 bucket, so the state
-    # rows land on the worker that already holds the series — the
+    # 0). Both sides are exchanged on the same bucket values, so the
+    # state rows land on the worker that already holds the series — the
     # handoff never touches the driver.
     def run(pdf: pd.DataFrame, st_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(pdf):
@@ -260,38 +256,26 @@ def sosfilt_chunked(
                     "zf": pd.Series(dtype=object),
                 }
             )
-        _st = {
-            tuple(r[k] for k in by): np.asarray(r["zf"]).reshape(n_sections, 2)
-            for _, r in st_pdf.iterrows()
-        }
         pdf = pdf.sort_values(by + ["__pos__"], kind="mergesort")
         starts, ends = _series_bounds(pdf, by)
         lengths = ends - starts
-        keys = [pdf[k].to_numpy() for k in by]
-        x = pdf[value].to_numpy(dtype=float)
-        out_val = np.empty(len(pdf))
+        zi = np.zeros((len(starts), n_sections, 2))
+        if len(st_pdf):
+            # every series in pass c >= 1 filled chunk c-1, so each has a
+            # state row; a left merge keeps series order, and without
+            # keys the bucket holds one series and one state row
+            heads = pdf.iloc[starts][by]
+            prev = heads.merge(st_pdf, on=by, how="left") if by else st_pdf
+            zi = np.stack(prev["zf"].to_numpy()).reshape(-1, n_sections, 2)
+        (x,) = _padded_blocks(starts, lengths, [pdf[value].to_numpy(dtype=float)])
+        y, zf = sosfilt_ragged(sos, x, lengths, zi=zi)
         zf_col = np.full(len(pdf), None, dtype=object)
-        for n in np.unique(lengths):
-            sel = np.flatnonzero(lengths == n)
-            s = starts[sel]
-            rows = (s[:, None] + np.arange(n)).ravel()
-            block = x[rows].reshape(len(s), n)
-            zi = np.stack(
-                [
-                    _st.get(
-                        tuple(a[i] for a in keys), np.zeros((n_sections, 2))
-                    )
-                    for i in s
-                ]
-            )
-            y, zf = sosfilt_1d(sos, block, zi=zi)
-            out_val[rows] = y.ravel()
-            for k_i, r in enumerate(s + n - 1):
-                zf_col[r] = zf[k_i].ravel().tolist()
+        for r, z in zip(ends - 1, zf.reshape(len(starts), -1).tolist()):
+            zf_col[r] = z
         res = pd.DataFrame({k: pdf[k].to_numpy() for k in by})
         res[dim] = pdf[dim].to_numpy()
         res["idx"] = pdf["__pos__"].to_numpy()
-        res["value"] = out_val
+        res["value"] = y[np.arange(x.shape[1])[None, :] < lengths[:, None]]
         res["zf"] = zf_col
         return res
 
@@ -302,6 +286,11 @@ def sosfilt_chunked(
     for c in range(int(max_chunk) + 1):
         left = dfc.filter(F.col("__chunk__") == c).withColumn(_BUCKET, bucket)
         right = state_df.withColumn(_BUCKET, bucket)
+        if by:
+            # explicit exchange, one bucket per partition (as in
+            # core.apply_cogrouped_kernel)
+            left = left.repartition(n_buckets, F.col(_BUCKET))
+            right = right.repartition(n_buckets, F.col(_BUCKET))
         # eager localCheckpoint: materializes this pass (the recursion
         # is sequential anyway) and truncates the lineage so pass c+1
         # plans against stored partitions, not a c-deep DAG
@@ -355,8 +344,6 @@ def lfilter(
         y, _zf = lfilter_ragged(b, a, x, lengths, zi=zi)
         return {"value": y, "__lengths__": lengths}
 
-    kernel.batch_ragged = True
-
     res = apply_series_kernel(
         df,
         kernel,
@@ -399,8 +386,6 @@ def filtfilt(
             ),
             "__lengths__": lengths,
         }
-
-    kernel.batch_ragged = True
 
     res = apply_series_kernel(
         df,

@@ -14,7 +14,7 @@ from collections.abc import Sequence
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from ..core import apply_series_kernel, resolve_keep_attrs
+from ..core import apply_series_kernel, per_length, resolve_keep_attrs
 from ..functions.complexsql import magnitude
 from ..functions.coords import linear_coord, restore_coord_dtype
 from ..kernels.dsp import hilbert_1d
@@ -46,7 +46,7 @@ def hilbert(
 
     res = apply_series_kernel(
         df,
-        kernel,
+        per_length(kernel),
         by=by,
         order=dim,
         values=[value],

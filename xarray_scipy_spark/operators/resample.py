@@ -13,7 +13,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..core import apply_series_kernel, resolve_keep_attrs
+from ..core import apply_series_kernel, per_length, resolve_keep_attrs
 from ..functions.coords import linear_coord, restore_coord_dtype
 from ..kernels.dsp import (
     decimate_ragged,
@@ -55,8 +55,6 @@ def decimate(
             x, lengths, q, n=n, ftype=ftype, zero_phase=zero_phase
         )
         return {"value": y, "__lengths__": out_lens}
-
-    kernel.batch_ragged = True
 
     res = apply_series_kernel(
         df,
@@ -117,7 +115,7 @@ def resample(
 
         return apply_series_kernel(
             df,
-            fkernel,
+            per_length(fkernel),
             by=by,
             order=dim,
             values=["re", "im"],
@@ -130,7 +128,7 @@ def resample(
 
     res = apply_series_kernel(
         df,
-        kernel,
+        per_length(kernel),
         by=by,
         order=dim,
         values=[value],
@@ -172,8 +170,6 @@ def resample_poly(
     def kernel(x, lengths):
         y, out_lens = resample_poly_ragged(x, lengths, up, down)
         return {"value": y, "__lengths__": out_lens}
-
-    kernel.batch_ragged = True
 
     res = apply_series_kernel(
         df,
@@ -223,8 +219,6 @@ def upfirdn(
     def kernel(x, lengths):
         y, out_lens = upfirdn_ragged(h, x, lengths, up, down)
         return {"value": y, "__lengths__": out_lens}
-
-    kernel.batch_ragged = True
 
     res = apply_series_kernel(
         df,

@@ -30,7 +30,12 @@ from collections.abc import Callable, Sequence
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from ..core import apply_cogrouped_kernel, apply_series_kernel, resolve_keep_attrs
+from ..core import (
+    apply_cogrouped_kernel,
+    apply_series_kernel,
+    per_length,
+    resolve_keep_attrs,
+)
 
 __all__ = [
     "stft",
@@ -149,6 +154,16 @@ def window_taps(window: str | Sequence[float] | None, frame_len: int) -> np.ndar
     return taps
 
 
+def _hop(frame_len: int, hop: int | None) -> int:
+    """Resolve the frame hop (default ``frame_len // 2``), rejecting a
+    non-positive frame length or hop at call time rather than inside
+    the Python workers."""
+    hop = frame_len // 2 if hop is None else hop
+    if hop < 1 or frame_len < 1:
+        raise ValueError("frame_len and hop must be >= 1")
+    return hop
+
+
 def _frames(x: np.ndarray, frame_len: int, hop: int) -> np.ndarray:
     """(n_series, n) -> (n_series, n_frames, frame_len) zero-copy frame
     view; the tail shorter than a full frame is dropped (scipy.signal
@@ -184,9 +199,7 @@ def stft(
 
     Series shorter than one frame produce no rows.
     """
-    hop = frame_len // 2 if hop is None else hop
-    if hop < 1 or frame_len < 1:
-        raise ValueError("frame_len and hop must be >= 1")
+    hop = _hop(frame_len, hop)
     taps = window_taps(window, frame_len)
     values = list(values)
     n_bins = frame_len // 2 + 1
@@ -203,7 +216,7 @@ def stft(
 
     res = apply_series_kernel(
         df,
-        kernel,
+        per_length(kernel),
         by=by,
         order=order or dim,
         values=values,
@@ -276,7 +289,7 @@ def istft(
     Output: ``[*by, t, <out>]`` with ``t`` the 0-based sample position
     of the original series.
     """
-    hop = frame_len // 2 if hop is None else hop
+    hop = _hop(frame_len, hop)
     taps = window_taps(window, frame_len)
     by = list(by)
     n_bins = frame_len // 2 + 1
@@ -307,7 +320,7 @@ def istft(
 
         res = apply_series_kernel(
             df,
-            fused_kernel,
+            per_length(fused_kernel),
             by=by,
             order=[frame_col, bin_col],
             values=[re_col, im_col],
@@ -322,7 +335,7 @@ def istft(
 
     segs = apply_series_kernel(
         df,
-        kernel,
+        per_length(kernel),
         by=[*by, frame_col],
         order=bin_col,
         values=[re_col, im_col],
@@ -383,9 +396,7 @@ def spectral_apply(
     total window weight ≤ ``weight_eps`` are dropped, and the tail
     beyond the last full frame was never framed.
     """
-    hop = frame_len // 2 if hop is None else hop
-    if hop < 1 or frame_len < 1:
-        raise ValueError("frame_len and hop must be >= 1")
+    hop = _hop(frame_len, hop)
     taps = window_taps(window, frame_len)
     n_bins = frame_len // 2 + 1
     by = list(by)
@@ -423,7 +434,7 @@ def spectral_apply(
 
     res = apply_series_kernel(
         df,
-        kernel,
+        per_length(kernel),
         by=by,
         order=order or dim,
         values=values,
@@ -477,7 +488,7 @@ def welch(
     ``n_bins`` rows per series regardless of series length — the
     reduction happens map-side, before any further aggregation.
     """
-    hop = frame_len // 2 if hop is None else hop
+    hop = _hop(frame_len, hop)
     nfft = frame_len if nfft is None else int(nfft)
     if nfft < frame_len:
         raise ValueError(f"nfft ({nfft}) must be >= frame_len ({frame_len})")
@@ -520,7 +531,7 @@ def welch(
 
     res = apply_series_kernel(
         df,
-        kernel,
+        per_length(kernel),
         by=by,
         order=order or dim,
         values=values,
@@ -572,7 +583,7 @@ def periodogram(
 
     res = apply_series_kernel(
         df,
-        kernel,
+        per_length(kernel),
         by=by,
         order=order or dim,
         values=values,
@@ -614,7 +625,7 @@ def csd(
     for the literal density). Both inputs co-locate through ONE
     cogrouped shuffle; output is twin ``re``/``im`` per bin.
     """
-    hop = frame_len // 2 if hop is None else hop
+    hop = _hop(frame_len, hop)
     taps = window_taps(window, frame_len)
     u = float(np.sum(taps**2))
     n_bins = frame_len // 2 + 1
@@ -666,7 +677,7 @@ def coherence(
     energy and one-sided fold cancel, so γ² ∈ [0, 1] needs no scaling.
     Requires several frames per series (a single frame gives γ² ≡ 1).
     """
-    hop = frame_len // 2 if hop is None else hop
+    hop = _hop(frame_len, hop)
     taps = window_taps(window, frame_len)
 
     def kernel(coords1, x, coords2, y):
